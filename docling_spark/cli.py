@@ -236,7 +236,7 @@ def run_convert(args: argparse.Namespace) -> int:
         df = _sources_df(spark, files)
         # one file per task: the kernel cost is per-document CPU, and a
         # CLI batch is small — the same pinned fan-out rationale as the
-        # table job's salting
+        # table job's range spread
         df = df.repartition(min(len(files),
                                 spark.sparkContext.defaultParallelism))
         extracted = extract_turns(
@@ -382,29 +382,43 @@ def _write_doc_outputs(doc: dict, status: str, out_dir: pathlib.Path,
     return status
 
 
+# how long convert-remote waits for one service task before giving up
+REMOTE_TASK_TIMEOUT_S = 600.0
+
+
 def _remote_task(base: str, path: str, body: dict, wait: float,
                  verbose: bool) -> "tuple[str, dict]":
     """Submit → ?wait= poll → fetch against a docling-spark service:
-    (terminal task_status, result body)."""
+    (terminal task_status, result body). HTTP errors, refused or dropped
+    connections, and a task still running after
+    ``REMOTE_TASK_TIMEOUT_S`` come back as a ``failure`` status with the
+    error; every request, a held poll included, ends by the deadline."""
     import time
     import urllib.request
 
-    req = urllib.request.Request(
-        f"{base}{path}", data=json.dumps(body).encode(),
-        headers={"Content-Type": "application/json"})
-    with urllib.request.urlopen(req) as resp:
-        task_id = json.loads(resp.read())["task_id"]
-    if verbose:
-        print(f"task {task_id} submitted to {path}")
-    while True:
+    deadline = time.monotonic() + REMOTE_TASK_TIMEOUT_S
+
+    def call(url: str, data: bytes | None = None) -> dict:
+        req = urllib.request.Request(
+            url, data=data, headers={"Content-Type": "application/json"})
+        left = max(deadline - time.monotonic(), 0.0) + wait
+        with urllib.request.urlopen(req, timeout=left) as resp:
+            return json.loads(resp.read())
+
+    try:
+        task_id = call(f"{base}{path}", json.dumps(body).encode())["task_id"]
+        if verbose:
+            print(f"task {task_id} submitted to {path}")
         poll = f"{base}/v1/status/poll/{task_id}?wait={wait}"
-        with urllib.request.urlopen(poll) as resp:
-            st = json.loads(resp.read())
-        if st["task_status"] in ("success", "failure"):
-            break
-        time.sleep(wait)
-    with urllib.request.urlopen(f"{base}/v1/result/{task_id}") as resp:
-        return st["task_status"], json.loads(resp.read())
+        while (st := call(poll))["task_status"] not in ("success",
+                                                        "failure"):
+            if time.monotonic() >= deadline:
+                raise TimeoutError(f"task {task_id} not finished after "
+                                   f"{REMOTE_TASK_TIMEOUT_S:g} s")
+            time.sleep(wait)
+        return st["task_status"], call(f"{base}/v1/result/{task_id}")
+    except OSError as exc:  # URLError, HTTPError, socket timeouts
+        return "failure", {"error": f"{type(exc).__name__}: {exc}"}
 
 
 def run_convert_remote(args: argparse.Namespace) -> int:
@@ -474,20 +488,26 @@ def run_convert_remote(args: argparse.Namespace) -> int:
         if args.chunk_tokenizer:
             with open(args.chunk_tokenizer, encoding="utf-8") as fh:
                 copts["tokenizer_json"] = json.load(fh)
+        # each source travels under its index as name, so two inputs
+        # sharing a basename keep their own chunks; records get the
+        # real name back before they are written
         status, res = _remote_task(
             base, f"/v1/chunk/{args.chunker}/source/async",
-            {"sources": sources, "convert_options": options,
-             "chunking_options": copts},
+            {"sources": [{**s, "name": str(i)}
+                         for i, s in enumerate(sources)],
+             "convert_options": options, "chunking_options": copts},
             args.poll_interval, args.verbose)
         if status == "failure":
             print(f"chunk task failed: {res.get('error')}",
                   file=sys.stderr)
             return 1
-        by_file: dict[str, list[dict]] = {}
+        by_src: dict[int, list[dict]] = {}
         for rec in res.get("chunks") or []:
-            by_file.setdefault(rec["filename"], []).append(rec)
-        for f in files:
-            recs = sorted(by_file.get(f.name, []),
+            i = int(rec["filename"])
+            by_src.setdefault(i, []).append(
+                {**rec, "filename": files[i].name})
+        for i, f in enumerate(files):
+            recs = sorted(by_src.get(i, []),
                           key=lambda r: r["chunk_index"])
             target = _out_path(out_dir, f.stem, _EXTENSIONS["chunks"],
                                taken)

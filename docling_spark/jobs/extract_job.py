@@ -1,4 +1,4 @@
-"""End-to-end extraction job: read → salt → extract → ordered write →
+"""End-to-end extraction job: read → range shuffle → extract → ordered write →
 metrics sidecar → checkpointed resume.
 
 The spark-submit entry point required by the north rule. Design notes for
@@ -8,15 +8,19 @@ the 10^12-turn / 1000-executor regime:
   pmod(xxhash64(conv_id), n_buckets)`` — the parquet stand-in for Iceberg's
   ``bucket(N, conv_id)`` transform (this sandbox has no Iceberg runtime; the
   write path is isolated here so the table format can swap in).
-- **Skew/salting**: extraction itself is per-row, so long conversations are
-  spread with ``repartition(salt)`` where ``salt = xxhash64(conv_id,
-  turn_idx) % parallelism`` — no conversation-level hotspot no matter how
-  skewed turn counts are (SURVEY.md §7.4.5: salting must not affect
-  correctness, and cannot, because extraction is conversation-agnostic).
-  Files are sorted within partitions, but parquet read-back gives NO
-  cross-split row-order guarantee — consumers needing stable turn order
-  re-establish it with ``extract_ops.with_turn_rank`` (window rank on
-  the unsalted key); this job deliberately does not pay that window.
+- **One range shuffle**: the input is range-partitioned on
+  ``(conv_bucket, conv_id, turn_idx)`` into ``parallelism`` tasks and
+  written straight after extraction. Each task owns a contiguous range of
+  buckets, so a run writes at most ``n_buckets + parallelism - 1`` files;
+  ``turn_idx`` in the range key spreads a long conversation across tasks
+  (SURVEY.md §7.4.5: the spread cannot affect correctness, because
+  extraction is conversation-agnostic). Each file is sorted by
+  ``(conv_id, turn_idx)``, but parquet read-back gives NO cross-split
+  row-order guarantee — consumers needing stable turn order re-establish
+  it with ``extract_ops.with_turn_rank``.
+- **Counts from the write**: status counts and the buckets this run
+  touched are observed on the written frame (``DataFrame.observe``), so
+  the job needs no bucket pre-pass and no read-back count.
 - **Resume**: completed buckets are recorded in a state table; a rerun
   anti-joins input buckets against completed ones and processes only the
   remainder (ConversionAssets save/load analog,
@@ -31,7 +35,7 @@ from __future__ import annotations
 
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from pyspark.sql import types as T
@@ -64,16 +68,14 @@ def _hadoop_path_exists(spark: SparkSession, path: str) -> bool:
 
 
 def salt_skew(df: DataFrame, parallelism: int) -> DataFrame:
-    """Row-level salting: spread every conversation's turns uniformly across
-    ``parallelism`` partitions. Long (10^6-turn) conversations cannot
-    hotspot a task because the partitioner never sees conv_id alone.
-
-    The partitioner hashes the FULL (conv_id, turn_idx) key space —
-    pre-modding to ``parallelism`` values and re-hashing those would be
-    balls-into-bins (measured: 23/64 partitions empty, hottest 4x
-    average); handing the raw columns to repartition keeps the spread
-    uniform."""
-    return df.repartition(parallelism, F.col("conv_id"), F.col("turn_idx"))
+    """Range-spread rows over ``parallelism`` partitions on whichever of
+    ``(conv_bucket, conv_id, turn_idx)`` the frame has. ``turn_idx`` in
+    the key splits a long (10^6-turn) conversation across tasks, so no
+    conversation can hotspot one; ``conv_bucket`` first gives each task a
+    contiguous range of output buckets."""
+    keys = [c for c in ("conv_bucket", "conv_id", "turn_idx")
+            if c in df.columns]
+    return df.repartitionByRange(parallelism, *keys)
 
 
 def sidecar_metrics(extracted: DataFrame, run_id: str,
@@ -167,32 +169,21 @@ def run_extract(
         if done_buckets:
             df = df.filter(~F.col("conv_bucket").isin(sorted(done_buckets)))
 
-    # the buckets THIS run processes, computed from the input before the
-    # heavy extraction (a narrow distinct over the hashed key): read-back
-    # bookkeeping is scoped to exactly these — dynamic partition
-    # overwrite PRESERVES partitions this run didn't touch, so an
-    # unscoped read-back would count stale buckets from prior runs into
-    # this run's counters/sidecar and wrongly mark them done
-    processed_buckets = {
-        int(r["conv_bucket"])
-        for r in df.select("conv_bucket").distinct().collect()
-    }
-
-    df = salt_skew(df, parallelism)
-    extracted = extract_turns(df.drop("conv_bucket"),
+    extracted = extract_turns(salt_skew(df, parallelism).drop("conv_bucket"),
                               pdf_passwords=pdf_passwords,
                               allowed_formats=allowed_formats)
-    extracted = extracted.withColumn("conv_bucket", bucket_col(n_buckets))
-
+    # status counts and the buckets THIS run processes, observed on the
+    # write itself: every input row yields one output row with the same
+    # conv_id, so these are exactly the input's buckets
+    statuses = ("success", "partial_success", "failure", "skipped")
+    obs = Observation("run_extract")
     (
-        extracted
-        # spread on (bucket, conv_id), NOT bucket alone: one task per
-        # bucket would funnel a mega-conversation's full extracted
-        # payloads through a single reducer — the very hotspot the
-        # salting avoided. partitionBy does not need bucket colocation;
-        # multiple tasks may write files into the same bucket directory.
-        .repartition(F.col("conv_bucket"), F.col("conv_id"))
-        .sortWithinPartitions("conv_id", "turn_idx")
+        extracted.withColumn("conv_bucket", bucket_col(n_buckets))
+        .observe(obs, F.collect_set("conv_bucket").alias("buckets"),
+                 *[F.sum((F.col("status") == s).cast("long")).alias(s)
+                   for s in statuses])
+        # after observe: the write sees this sort and adds none of its own
+        .sortWithinPartitions("conv_bucket", "conv_id", "turn_idx")
         .write.mode("overwrite")
         # writer-scoped, NOT session conf: mutating the shared session's
         # partitionOverwriteMode would silently change the semantics of
@@ -201,17 +192,9 @@ def run_extract(
         .partitionBy("conv_bucket")
         .parquet(output_path)
     )
-
-    # read-back scoped to THIS run's buckets only: counts and sidecar
-    # reflect exactly the work this run did, never stale partitions
-    # preserved on disk by dynamic overwrite
-    out = spark.read.schema(OUTPUT_SCHEMA).parquet(output_path)
-    out = out.filter(F.col("conv_bucket").isin(sorted(processed_buckets))
-                     if processed_buckets else F.lit(False))
-    counts = {
-        r["status"]: r["n"]
-        for r in out.groupBy("status").agg(F.count("*").alias("n")).collect()
-    }
+    seen = obs.get
+    processed_buckets = set(seen["buckets"] or [])
+    counts = {s: seen[s] for s in statuses if seen[s]}
 
     if state_path:
         # APPEND-ONLY state log, committed BEFORE the metrics append:
@@ -234,6 +217,12 @@ def run_extract(
                 .write.mode("append").parquet(state_path)
 
     if metrics_path:
+        # read-back scoped to THIS run's buckets only: dynamic overwrite
+        # preserves partitions this run did not touch, and the sidecar
+        # reflects exactly the work this run did
+        out = spark.read.schema(OUTPUT_SCHEMA).parquet(output_path)
+        out = out.filter(F.col("conv_bucket").isin(sorted(processed_buckets))
+                         if processed_buckets else F.lit(False))
         sidecar_metrics(out, run_id,
                         wall_ms=int((time.time() - t0) * 1000)) \
             .write.mode("append").parquet(metrics_path)

@@ -420,7 +420,8 @@ def _bounded_unigrams(corpus_toks: DataFrame,
     TakeOrderedAndProject (per-partition partial top-V, merged once) —
     no global sort.
 
-    ``scalars``: one row (n_total, v_eff, n_unk, unk_mean). ``v_eff``
+    ``scalars``: one row (n_total, v_eff, n_unk, unk_mean, vocab_all,
+    v_top) — the last two are the corpus and retained type counts. ``v_eff``
     counts the retained types plus one ``<unk>`` type when anything
     overflowed; ``n_unk`` is the dropped tokens' total count and
     ``unk_mean`` the mean count of a dropped TYPE — every OOV token
@@ -431,18 +432,20 @@ def _bounded_unigrams(corpus_toks: DataFrame,
     When the vocabulary fits (v_eff == vocab, unk never consulted)
     the formula reduces exactly to the unbounded LM, which is what
     the DuckDB oracles pin.
+
+    Computing ``top`` runs one Spark job when this is called.
     """
     uni = corpus_toks.groupBy("token").agg(F.count("*").alias("n_t"))
     tot = uni.agg(F.coalesce(F.sum("n_t"), F.lit(0)).alias("n_total"),
                   F.count("*").alias("vocab_all"))
-    # persist the top-V table: it is consumed three times (its own
-    # totals, the scalar attach, the per-token join) and physical
-    # exchange reuse does not kick in across those subtrees, so without
-    # the cache the token explode + unigram shuffle re-ran for each.
-    # Safe to pin: the table is O(max_vocab) rows by construction. Like
-    # dedup's persisted candidate frames, it must stay live until the
-    # consumer executes (callers/bench clear cache between queries).
-    top = uni.orderBy(F.desc("n_t"), "token").limit(max_vocab).persist()
+    # the top-V table is consumed three times (its own totals, the scalar
+    # attach, the per-token join) and physical exchange reuse does not
+    # kick in across those subtrees. It is O(max_vocab) rows by
+    # construction, so it is computed once (one token explode + unigram
+    # shuffle) into a driver-local relation: the consumers read that,
+    # and nothing stays cached in executor storage after they run.
+    top = uni.orderBy(F.desc("n_t"), "token").limit(max_vocab)
+    top = corpus_toks.sparkSession.createDataFrame(top.toArrow(), top.schema)
     top_tot = top.agg(
         F.coalesce(F.sum("n_t"), F.lit(0)).alias("n_top"),
         F.count("*").alias("v_top"))
@@ -455,6 +458,7 @@ def _bounded_unigrams(corpus_toks: DataFrame,
         ((F.col("n_total") - F.col("n_top"))
          / F.greatest(F.col("vocab_all") - F.col("v_top"), F.lit(1)))
         .alias("unk_mean"),
+        "vocab_all", "v_top",
     )
     return top, scalars
 
@@ -468,21 +472,15 @@ def lm_vocab_overflow(docs: DataFrame, text_col: str = "text",
     measured number, not a silent approximation."""
     toks = docs.select(
         F.explode(tokens(norm_text(F.col(text_col)))).alias("token"))
-    top, scalars = _bounded_unigrams(toks, max_vocab)
-    kept = top.agg(F.count("*").alias("vocab_kept"))
-    uni_all = toks.groupBy("token").agg(F.count("*").alias("n_t"))
-    all_tot = uni_all.agg(F.count("*").alias("vocab_all"))
+    _, scalars = _bounded_unigrams(toks, max_vocab)
     return (
-        all_tot.crossJoin(kept).crossJoin(
-            scalars.select(F.col("n_unk").alias("unk_token_count")))
-        .filter(F.col("vocab_all") > F.col("vocab_kept"))
+        scalars.filter(F.col("vocab_all") > F.col("v_top"))
         .select(
             F.col("vocab_all").cast("bigint").alias("vocab_all"),
-            F.col("vocab_kept").cast("bigint").alias("vocab_kept"),
-            (F.col("vocab_all") - F.col("vocab_kept")).cast("bigint")
+            F.col("v_top").cast("bigint").alias("vocab_kept"),
+            (F.col("vocab_all") - F.col("v_top")).cast("bigint")
             .alias("dropped_types"),
-            F.col("unk_token_count").cast("bigint")
-            .alias("unk_token_count"),
+            F.col("n_unk").cast("bigint").alias("unk_token_count"),
         )
     )
 

@@ -221,3 +221,62 @@ def test_corrupt_state_raises_instead_of_fresh_start(spark, tmp_path):
     with pytest.raises(Exception):
         run_extract(spark, tr, out, run_id="r1", n_buckets=8,
                     state_path=state)
+
+
+def test_write_files_bounded_by_buckets_plus_tasks(spark, transcripts,
+                                                   tmp_path):
+    """Range-partitioned write: each task owns a contiguous range of
+    buckets, so a run writes at most n_buckets + parallelism - 1 files —
+    also when AQE does not coalesce small shuffles into one task."""
+    import glob
+
+    out = str(tmp_path / "out")
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        run_extract(spark, transcripts, out, run_id="r1", n_buckets=8,
+                    parallelism=5)
+    finally:
+        spark.conf.set(key, prior)
+    files = glob.glob(f"{out}/conv_bucket=*/*.parquet")
+    assert files
+    assert len(files) <= 8 + 5 - 1
+
+
+def test_each_file_sorted_by_conv_and_turn(spark, transcripts, tmp_path):
+    import glob
+
+    import pyarrow.parquet as pq
+
+    out = str(tmp_path / "out")
+    run_extract(spark, transcripts, out, run_id="r1", n_buckets=8,
+                parallelism=5)
+    files = glob.glob(f"{out}/conv_bucket=*/*.parquet")
+    assert files
+    for f in files:
+        t = pq.read_table(f, columns=["conv_id", "turn_idx"])
+        keys = list(zip(t.column("conv_id").to_pylist(),
+                        t.column("turn_idx").to_pylist()))
+        assert keys == sorted(keys), f
+
+
+def test_fully_resumed_rerun_is_empty(spark, tmp_path):
+    """Nothing left to do: the observed counts are empty (no rows reach
+    the write), and no state or metrics rows are appended."""
+    out = str(tmp_path / "out")
+    state = str(tmp_path / "state")
+    metrics = str(tmp_path / "metrics")
+    tr = transcripts_df(spark, 12, partitions=2, long_every=0)
+    r1 = run_extract(spark, tr, out, run_id="r1", n_buckets=8,
+                     state_path=state, metrics_path=metrics)
+    assert r1["total"] == tr.count()
+    n_state = spark.read.parquet(state).count()
+    n_metrics = spark.read.parquet(metrics).count()
+    r2 = run_extract(spark, tr, out, run_id="r2", n_buckets=8,
+                     state_path=state, metrics_path=metrics)
+    assert r2["total"] == 0
+    assert r2["counts"] == {}
+    assert spark.read.parquet(state).count() == n_state
+    assert spark.read.parquet(metrics).count() == n_metrics
+    assert spark.read.parquet(out).count() == tr.count()

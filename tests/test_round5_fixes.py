@@ -86,6 +86,17 @@ def test_lm_vocab_overflow_report(spark):
     assert lm_vocab_overflow(docs, max_vocab=16).count() == 0
 
 
+def test_bounded_vocab_leaves_nothing_cached(spark):
+    """The top-V table must not stay pinned in executor storage once its
+    consumers have run."""
+    docs = _docs(spark, [(1, "aa aa bb\ncc"), (2, "bb dd")])
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = persisted().size()
+    for fn in (line_perplexity, ccnet_buckets, lm_vocab_overflow):
+        fn(docs, max_vocab=2).collect()
+    assert persisted().size() == before
+
+
 # ---------------------------------------------- int8 embedding quantization
 
 def test_quantize_roundtrip_error_bounded(spark):
